@@ -41,6 +41,16 @@ object SparkEntry {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
+  /** Joins two per-`l_returnflag` aggregates of the split-countDistinct
+    * rewrites back together. NULL-SAFE: a groupBy keeps the NULL flag as
+    * its own group, and a plain equi-join would drop it.
+    */
+  private def joinOnFlag(left: DataFrame, right: DataFrame): DataFrame =
+    left
+      .join(right.withColumnRenamed("l_returnflag", "r_flag"),
+        col("l_returnflag") <=> col("r_flag"))
+      .drop("r_flag")
+
   /** [[spread]] applied to the documents table — the shared entry of the
     * kernel-heavy document queries.
     */
@@ -166,20 +176,17 @@ object SparkEntry {
       // distinct columns in one agg still Expand-triple the input before
       // the exchange; one single-distinct agg per column partial-aggregates
       // map-side with no row multiplication (same values, same rows)
-      val exact = li
-        .groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_orderkey")).as("exact_orders"))
-        .join(
-          li.groupBy(col("l_returnflag"))
-            .agg(countDistinct(col("l_partkey")).as("exact_parts")),
-          Seq("l_returnflag"))
+      val exact = joinOnFlag(
+        li.groupBy(col("l_returnflag"))
+          .agg(countDistinct(col("l_orderkey")).as("exact_orders")),
+        li.groupBy(col("l_returnflag"))
+          .agg(countDistinct(col("l_partkey")).as("exact_parts")))
       val sketch = li
         .groupBy(col("l_returnflag"))
         .agg(
           approx_count_distinct(col("l_orderkey"), 0.02).as("a_o"),
           approx_count_distinct(col("l_partkey"), 0.02).as("a_p"))
-      exact
-        .join(sketch, Seq("l_returnflag"))
+      joinOnFlag(exact, sketch)
         .select(
           col("l_returnflag"),
           col("exact_orders"),
@@ -232,8 +239,7 @@ object SparkEntry {
       val parts = li
         .groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("n_parts"))
-      orders
-        .join(parts, Seq("l_returnflag"))
+      joinOnFlag(orders, parts)
         .select(col("l_returnflag"), col("n_orders"), col("n_parts"), col("n_rows"))
     }),
     "q_explode_tokens" -> ((s, dir) => {

@@ -18,6 +18,13 @@ import graft.model.Lineage
   * FIRST, the batch's lineage rows are appended SECOND, and a group counts
   * as committed iff its lineage rows are readable. A crash between the two
   * steps leaves orphan results that the re-run must replace, not duplicate.
+  *
+  * Layout contract: `results` arrive already clustered by `commit_group` —
+  * hash-partitioned once by the caller, before its cache, so each group
+  * sits whole in one partition. A store writes them as they are (a
+  * partitioned write then emits one file per group) and must not
+  * reshuffle: a per-batch repartition would re-read and re-shuffle the
+  * cache for every batch.
   */
 trait CommitStore {
 
@@ -28,7 +35,9 @@ trait CommitStore {
 
   /** Durably write one batch: results (replacing any orphan data for these
     * groups from a crashed previous attempt), then the lineage rows whose
-    * visibility marks the groups committed.
+    * visibility marks the groups committed. `results` holds exactly the
+    * batch's rows, clustered by commit group; `lineageRows` exactly the
+    * batch's lineage.
     */
   def commitBatch(
       results: Dataset[ExtractionJob.ResultRow],
@@ -63,11 +72,7 @@ final class ParquetCommitStore(outputDir: String) extends CommitStore {
       batch: Seq[Int]
   )(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    // One shuffle of the (payload-free) results into commit groups: bounds
-    // output file count to ~1 per group instead of numPartitions x groups.
-    results
-      .repartition(math.max(batch.size, 1), col("commit_group"))
-      .write
+    results.write
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .partitionBy("commit_group")
@@ -113,10 +118,9 @@ final class IcebergCommitStore(resultsTable: String, lineageTable: String)
       batch: Seq[Int]
   )(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    val shaped = results.repartition(math.max(batch.size, 1), col("commit_group"))
     if (!spark.catalog.tableExists(resultsTable))
-      shaped.writeTo(resultsTable).partitionedBy(col("commit_group")).create()
-    else shaped.writeTo(resultsTable).overwritePartitions()
+      results.writeTo(resultsTable).partitionedBy(col("commit_group")).create()
+    else results.writeTo(resultsTable).overwritePartitions()
     val lin = lineageRows.toDS().coalesce(1)
     if (!spark.catalog.tableExists(lineageTable)) lin.writeTo(lineageTable).create()
     else lin.writeTo(lineageTable).append()

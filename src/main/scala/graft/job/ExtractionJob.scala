@@ -28,9 +28,11 @@ import graft.model._
   * the OPTIONAL input repartition (`repartitionInput`), for scans whose
   * file layout clusters by host (WARC-by-host crawls) — that path salts
   * skewed hosts explicitly. The default path moves (a) the flagged ~5%
-  * (with payloads) into uniform url-hash batches for the heavy stage and
-  * (b) the extracted results (payload-free) into commit groups at write
-  * time. Everything else is narrow.
+  * (with payloads) into uniform url-hash batches for the heavy stage
+  * (batched mode only) and (b) the extracted results (payload-free) into
+  * commit groups ONCE, before the checkpointed run caches them; lineage
+  * and every commit batch then read that cache without another exchange.
+  * Everything else is narrow.
   */
 object ExtractionJob {
 
@@ -367,12 +369,15 @@ object ExtractionJob {
     *
     * The input is scanned ONCE for all remaining groups: extraction results
     * (payload-free — unflagged rows shed payloads inside the extract stage)
-    * are persisted, and each commit batch filters the CACHE, so input scans
-    * do not grow with batch count (O(corpus), not O(batches x corpus)). A
-    * crash mid-run loses only the cache; the resumed run re-scans once for
-    * the still-uncommitted groups. On the production Iceberg table the
-    * url-hash bucket layout additionally turns the remaining-groups filter
-    * into partition pruning.
+    * are hash-partitioned by commit_group ONCE and persisted, and each
+    * commit batch filters the CACHE, so input scans do not grow with batch
+    * count (O(corpus), not O(batches x corpus)). One job computes the
+    * lineage of every remaining group (and fills the cache); each batch
+    * then hands the store its own rows — clustered, so the write needs no
+    * exchange — and its own lineage rows. A crash mid-run loses only the
+    * cache; the resumed run re-scans once for the still-uncommitted
+    * groups. On the production Iceberg table the url-hash bucket layout
+    * additionally turns the remaining-groups filter into partition pruning.
     */
   def runCheckpointed(
       pages: DataFrame,
@@ -401,19 +406,24 @@ object ExtractionJob {
     // handle — raw-RDD unpersist would leak CacheManager entries and turn
     // same-plan re-persists into no-ops
     val caches = scala.collection.mutable.Buffer.empty[Dataset[_]]
-    val results = extract(pages, cfg, skewed, Some(remaining), caches)
-    val persisted = results.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    // the commit path's one shuffle: each commit group lands whole in one
+    // partition, and filtering to a batch keeps that partitioning, so the
+    // lineage job and every batch write plan no exchange and a partitioned
+    // write emits one file per group
+    val persisted = extract(pages, cfg, skewed, Some(remaining), caches)
+      .repartition(partitions(cfg), col("commit_group"))
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
     caches += persisted
 
     val all = Seq.newBuilder[Lineage]
     try {
+      // one job for every batch's commit records; it also fills the cache
+      val byGroup = lineage(persisted).collect().toSeq.groupBy(_.commit_group)
       remaining.grouped(cfg.groupsPerCommit).foreach { batch =>
         val subset = persisted.filter(col("commit_group").isInCollection(batch))
-        val computed = lineage(subset).collect().toSeq
         // groups with zero rows still need a commit record, else every
         // resume re-scans them forever (found by CLI resume verification)
-        val empties = batch.toSet -- computed.map(_.commit_group)
-        val lin = computed ++ empties.toSeq.sorted.map(Lineage(_, -1, 0L, 0L, 0L))
+        val lin = batch.flatMap(g => byGroup.getOrElse(g, Seq(Lineage(g, -1, 0L, 0L, 0L))))
         // results first, lineage second (the store contract): a crash
         // between the two leaves replaceable orphans, never a committed
         // group without data

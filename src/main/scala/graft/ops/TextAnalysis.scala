@@ -75,26 +75,46 @@ object TextAnalysis {
       bpeishTokenCount(col("text")).cast("long").as("bpeish_tokens"),
       length(col("text")).cast("long").as("n_chars"))
 
+  private final case class QualitySignals(
+      nTokens: Column,
+      avgWordLen: Column,
+      lengthSignal: Column,
+      stopSignal: Column,
+      digitSignal: Column)
+
+  /** The quality composite's row-local signals over text column `t`.
+    * Ratios divide with SQL's null-on-zero semantics (`try_divide`), not
+    * ANSI's DIVIDE_BY_ZERO: an empty document has length 0, its digit
+    * ratio is NULL, and `least` skips NULL, so its digit signal reads 0.0
+    * exactly as in the SQL definition.
+    */
+  private def qualitySignals(t: Column): QualitySignals = {
+    val nTokens = tokenCount(t).cast("double")
+    val stopwords = Seq(" the ", " a ", " of ", " and ", " in ")
+      .map(m => markerCount(t, m)).reduce(_ + _).cast("double")
+    val digits =
+      (length(t) - length(regexp_replace(t, "[0-9]", ""))).cast("double")
+    QualitySignals(
+      nTokens = nTokens,
+      avgWordLen = try_divide(length(t) - (nTokens - 1), nTokens),
+      lengthSignal = least(lit(1.0), nTokens / lit(100.0)),
+      stopSignal = least(lit(1.0), try_divide(stopwords, nTokens) * lit(8.0)),
+      digitSignal =
+        lit(1.0) - least(lit(1.0), try_divide(digits, length(t).cast("double")) * lit(4.0)))
+  }
+
   /** The [[qualityScore]] composite as a bare Column — the single
     * definition of the score so per-doc reporting and source-level
     * aggregation cannot fork. Rounded to 4 decimals (bit-identical across
     * Spark and an ANSI engine for the oracle hash compare).
     */
   def qualityScoreCol(t: Column): Column = {
-    val nTokens = tokenCount(t).cast("double")
-    val stopwords = Seq(" the ", " a ", " of ", " and ", " in ")
-      .map(m => markerCount(t, m)).reduce(_ + _).cast("double")
-    val digits =
-      (length(t) - length(regexp_replace(t, "[0-9]", ""))).cast("double")
-    val avgWordLen = (length(t) - (nTokens - 1)) / nTokens
-    val lengthSignal = least(lit(1.0), nTokens / lit(100.0))
-    val stopSignal = least(lit(1.0), stopwords / nTokens * lit(8.0))
-    val digitSignal = lit(1.0) - least(lit(1.0), digits / length(t).cast("double") * lit(4.0))
+    val s = qualitySignals(t)
     val wordLenSignal =
-      when(avgWordLen >= 3.0 && avgWordLen <= 8.0, lit(1.0)).otherwise(lit(0.5))
+      when(s.avgWordLen >= 3.0 && s.avgWordLen <= 8.0, lit(1.0)).otherwise(lit(0.5))
     round(
-      lit(0.3) * lengthSignal + lit(0.3) * stopSignal +
-        lit(0.2) * digitSignal + lit(0.2) * wordLenSignal, 4)
+      lit(0.3) * s.lengthSignal + lit(0.3) * s.stopSignal +
+        lit(0.2) * s.digitSignal + lit(0.2) * wordLenSignal, 4)
   }
 
   /** Per-doc quality proxy signals + composite, all integer-ratio
@@ -103,22 +123,14 @@ object TextAnalysis {
     * shape (quality.py:327-342) with SQL-expressible signals.
     */
   def qualityScore(docs: DataFrame): DataFrame = {
-    val t = col("text")
-    val nTokens = tokenCount(t).cast("double")
-    val stopwords = Seq(" the ", " a ", " of ", " and ", " in ")
-      .map(m => markerCount(t, m)).reduce(_ + _).cast("double")
-    val digits =
-      (length(t) - length(regexp_replace(t, "[0-9]", ""))).cast("double")
-    val avgWordLen = (length(t) - (nTokens - 1)) / nTokens
-    val stopSignal = least(lit(1.0), stopwords / nTokens * lit(8.0))
-    val digitSignal = lit(1.0) - least(lit(1.0), digits / length(t).cast("double") * lit(4.0))
-    val score = qualityScoreCol(t)
+    val s = qualitySignals(col("text"))
+    val score = qualityScoreCol(col("text"))
     docs.select(
       col("doc_id"),
-      nTokens.cast("long").as("n_tokens"),
-      round(avgWordLen, 4).as("avg_word_len"),
-      round(stopSignal, 4).as("stop_signal"),
-      round(digitSignal, 4).as("digit_signal"),
+      s.nTokens.cast("long").as("n_tokens"),
+      round(s.avgWordLen, 4).as("avg_word_len"),
+      round(s.stopSignal, 4).as("stop_signal"),
+      round(s.digitSignal, 4).as("digit_signal"),
       score.as("quality_score"),
       (score < 0.5).as("flagged"))
   }

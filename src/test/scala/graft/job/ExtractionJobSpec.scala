@@ -149,6 +149,8 @@ class ExtractionJobSpec extends AnyFunSuite {
     import org.apache.spark.sql.{Dataset, SparkSession}
     val pages = CorpusGen.pages(spark, 60).toDF()
     val c = cfg.copy(numGroups = 8, groupsPerCommit = 4)
+    def expected(batch: Seq[Int]): Seq[String] =
+      ExtractionJob.extract(pages, c, Set.empty, Some(batch)).collect().map(_.url).sorted.toSeq
     // fake store pre-seeded with half the groups committed: the run must
     // consult the STORE for resume state (not any filesystem path) and
     // commit only the remainder, in groupsPerCommit-sized batches
@@ -160,7 +162,12 @@ class ExtractionJobSpec extends AnyFunSuite {
           results: Dataset[ExtractionJob.ResultRow],
           lineageRows: Seq[graft.model.Lineage],
           batch: Seq[Int])(implicit s: SparkSession): Unit = {
-        assert(results.collect().forall(r => batch.contains(r.commit_group)))
+        val urls = results.collect().map { r =>
+          assert(batch.contains(r.commit_group))
+          r.url
+        }
+        // the batch's rows, all of them and only them
+        assert(urls.sorted.toSeq == expected(batch))
         batches += batch
         committed ++= batch
       }
@@ -170,6 +177,93 @@ class ExtractionJobSpec extends AnyFunSuite {
     assert(batches.toList == List(Seq(4, 5, 6, 7)))
     // second run: store says everything is committed -> no-op
     assert(ExtractionJob.runCheckpointed(pages, c, store).isEmpty)
+  }
+
+  /** Records what a checkpointed run hands its store, batch by batch,
+    * then commits through the parquet store.
+    */
+  private final class RecordingStore(out: String) extends CommitStore {
+    import org.apache.spark.sql.{Dataset, SparkSession}
+    private val inner = new ParquetCommitStore(out)
+    val plans = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.execution.SparkPlan]
+    val lineage = scala.collection.mutable.ListBuffer.empty[(Seq[Int], Seq[graft.model.Lineage])]
+    override def committedGroups()(implicit s: SparkSession): Set[Int] = inner.committedGroups()(s)
+    override def commitBatch(
+        results: Dataset[ExtractionJob.ResultRow],
+        lineageRows: Seq[graft.model.Lineage],
+        batch: Seq[Int])(implicit s: SparkSession): Unit = {
+      plans += results.queryExecution.executedPlan
+      lineage += batch -> lineageRows
+      inner.commitBatch(results, lineageRows, batch)(s)
+    }
+  }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+
+    /** Exchanges in `plan` itself, not inside the cached relations it reads. */
+    def exchanges(plan: SparkPlan): Seq[Exchange] = collect(plan) { case e: Exchange => e }
+
+    def cachedPlans(plan: SparkPlan): Seq[SparkPlan] =
+      collect(plan) { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+  }
+
+  test("results are shuffled into commit groups once, before the cache; batch writes add no exchange") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val out = Files.createTempDirectory("graft-shape").toString
+    val pages = CorpusGen.pages(spark, 120).toDF()
+    val c = cfg.copy(numGroups = 8, groupsPerCommit = 2)
+    val store = new RecordingStore(out)
+    ExtractionJob.runCheckpointed(pages, c, store)
+    assert(store.plans.size == 4)
+    store.plans.foreach { plan =>
+      assert(Plans.exchanges(plan).isEmpty, s"batch write input shuffles:\n$plan")
+      val cached = Plans.cachedPlans(plan)
+      assert(cached.size == 1, s"batch must read the one cached result:\n$plan")
+      val ex = Plans.exchanges(cached.head)
+      assert(ex.size == 1, s"cached results plan:\n${cached.head}")
+      ex.head match {
+        case ShuffleExchangeExec(HashPartitioning(Seq(a: AttributeReference), n), _, _, _) =>
+          assert(a.name == "commit_group")
+          assert(n == c.numPartitions)
+        case other => fail(s"expected hashpartitioning(commit_group): $other")
+      }
+    }
+  }
+
+  test("each non-empty commit group is written as exactly one data file") {
+    val out = Files.createTempDirectory("graft-onefile")
+    val pages = CorpusGen.pages(spark, 120).toDF()
+    val c = cfg.copy(numGroups = 8, groupsPerCommit = 2)
+    val lin = ExtractionJob.runCheckpointed(pages, c, out.toString)
+    val nonEmpty = lin.filter(_.doc_count > 0).map(_.commit_group).distinct
+    assert(nonEmpty.size == c.numGroups, s"tiny corpus should fill every group: $lin")
+    nonEmpty.foreach { g =>
+      val dir = out.resolve(s"results/commit_group=$g")
+      val files = Files.list(dir).toArray.map(_.toString.split('/').last)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(files.length == 1, s"group $g: ${files.toSeq}")
+    }
+  }
+
+  test("each batch's lineage rows are the extraction lineage of its groups") {
+    val out = Files.createTempDirectory("graft-batchlineage").toString
+    val pages = CorpusGen.pages(spark, 120).toDF()
+    val c = cfg.copy(numGroups = 8, groupsPerCommit = 3)
+    val store = new RecordingStore(out)
+    ExtractionJob.runCheckpointed(pages, c, store)
+    val want = ExtractionJob.lineage(
+      ExtractionJob.extract(pages, c, Set.empty, Some(0 until c.numGroups))).collect().toSeq
+    assert(store.lineage.map(_._1).toList == List(Seq(0, 1, 2), Seq(3, 4, 5), Seq(6, 7)))
+    store.lineage.foreach { case (batch, rows) =>
+      val key = (l: graft.model.Lineage) => (l.commit_group, l.partition_id)
+      assert(rows.sortBy(key) == want.filter(l => batch.contains(l.commit_group)).sortBy(key),
+        s"batch $batch")
+    }
   }
 
   test("skew detection is scheme-case-robust (HTTPS:// hosts land in the salted branch)") {

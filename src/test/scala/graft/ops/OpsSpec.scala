@@ -820,6 +820,32 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(r(1L).getAs[Long]("n_tokens") == 150)
   }
 
+  test("an empty document scores without DIVIDE_BY_ZERO under ANSI mode") {
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val df = Seq(
+        (1L, "s1", "the cat sat in the hat"),
+        (2L, "s1", "")).toDF("doc_id", "source", "text")
+      val r = TextAnalysis.qualityScore(df).collect()
+        .map(x => x.getAs[Long]("doc_id") -> x).toMap
+      // '' splits into one empty token; its digit ratio is 0/0 = NULL,
+      // which least() skips (the SQL definition's semantics), so the
+      // digit signal is 0.0: 0.3 * 1/100 + 0.2 * 0 + 0.2 * 0.5
+      assert(r(2L).getAs[Long]("n_tokens") == 1L)
+      assert(r(2L).getAs[Double]("avg_word_len") == 0.0)
+      assert(r(2L).getAs[Double]("digit_signal") == 0.0)
+      assert(r(2L).getAs[Double]("quality_score") == 0.103)
+      assert(r(2L).getAs[Boolean]("flagged"))
+      val rep = TextAnalysis.sourceReputation(df).collect().head
+      assert(rep.getAs[Long]("n_docs") == 2L && rep.getAs[Long]("n_flagged") == 1L)
+      assert(TextAnalysis.sourceFilter(df).count() == 2L)
+      val sel = graft.ops.Pipeline.selectBudget(df, budget = 6L).collect()
+        .map(x => x.getAs[Long]("doc_id") -> x.getAs[Boolean]("selected")).toMap
+      assert(sel == Map(1L -> true, 2L -> false))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("url canonicalization rules") {
     import graft.ops.TextAnalysis.canonicalizeUrl
     val cases = Seq(
